@@ -1,5 +1,24 @@
 """Driver-contract invariants (CLAUDE.md 50-query cap rule)."""
 
+import pathlib
+
+import pytest
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
+
+
+@pytest.fixture(scope="session")
+def deployment_zip() -> pathlib.Path:
+    """The gitignored spark-submit artifact, built by
+    tools/make_pyfiles.py only when absent (a fresh clone) — an
+    existing zip is used as is, so a stale one still fails."""
+    path = REPO / "wceb_spark.zip"
+    if not path.exists():
+        from tools.make_pyfiles import main
+
+        main()
+    return path
+
 
 def test_exactly_fifty_queries_all_oracled():
     """The driver checks at most 50 queries per round: the dict must hold
@@ -28,22 +47,20 @@ def test_queries_and_oracles_are_pure_builders():
     )
 
 
-def test_deployment_zip_is_fresh():
+def test_deployment_zip_is_fresh(deployment_zip):
     """The spark-submit artifact must contain every current package
     module WITH current content — a stale zip silently deploys old code
     (regenerate with `python tools/make_pyfiles.py`).  CRC comparison
     catches edited-but-not-repackaged modules, not just missing ones."""
     import os
-    import pathlib
     import zipfile
     import zlib
 
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    with zipfile.ZipFile(repo / "wceb_spark.zip") as zf:
+    with zipfile.ZipFile(deployment_zip) as zf:
         crcs = {info.filename: info.CRC for info in zf.infolist()}
-    pkg = repo / "web_content_extraction_benchmark_spark"
+    pkg = REPO / "web_content_extraction_benchmark_spark"
     for path in pkg.rglob("*.py"):
-        rel = os.path.relpath(path, repo)
+        rel = os.path.relpath(path, REPO)
         assert rel in crcs, f"stale wceb_spark.zip: missing {rel}"
         assert zlib.crc32(path.read_bytes()) == crcs[rel], (
             f"stale wceb_spark.zip: outdated {rel} "

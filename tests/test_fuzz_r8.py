@@ -12,13 +12,17 @@ no Spark session needed, so the case counts can be high):
   ObjStm, predictors, fonts, filters) must round-trip the word
   sequence byte-identically; random single-byte corruptions must
   either still parse or raise PdfError — never hang, never crash
-  with a non-PdfError from the public entry point.
+  with a non-PdfError from the public entry point;
+- PDF lexer end of buffer (hypothesis): trailing whitespace/comments
+  after a content stream add no token and raise nothing.
 """
 
 import gzip
 import random
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from web_content_extraction_benchmark_spark.extractors import pdf_text as P
 from web_content_extraction_benchmark_spark.sources import pdf_synth as S
@@ -130,3 +134,36 @@ def test_fuzz_pdf_arm_roundtrip_and_corruption():
             pass
         except RecursionError:
             pytest.fail(f"recursion blowup at case {case}")
+
+
+_PDF_WS = b"\x00\t\n\x0c\r "
+_content_tokens = st.sampled_from([
+    b"BT", b"ET", b"/F1", b"12", b"-3.5", b"Tf", b"Tj", b"TJ", b"T*",
+    b"(a b)", b"(x\\(y)", b"<48656c6c6f>", b"[(a) -200 (b)]", b"<<",
+    b">>",
+])
+_ws_run = st.lists(st.sampled_from(_PDF_WS), min_size=1).map(bytes)
+_comment = st.tuples(
+    st.binary(max_size=12).map(
+        lambda b: b"%" + b.replace(b"\r", b"").replace(b"\n", b"")
+    ),
+    st.sampled_from([b"", b"\n", b"\r", b"\r\n"]),
+).map(b"".join)
+
+
+def _pdf_tokens(buf: bytes) -> list:
+    lex = P._Lexer(buf)
+    out = []
+    while (tok := lex.next_token()) is not None:
+        out.append(tok)
+    return out
+
+
+@given(
+    st.lists(st.tuples(_content_tokens, _ws_run), max_size=12),
+    st.lists(st.one_of(_ws_run, _comment), max_size=4),
+)
+@settings(max_examples=300, deadline=None)
+def test_pdf_lexer_trailing_ws_and_comments_add_no_token(parts, tail):
+    stream = b"".join(tok + ws for tok, ws in parts).rstrip(_PDF_WS)
+    assert _pdf_tokens(stream + b"".join(tail)) == _pdf_tokens(stream)

@@ -14,6 +14,16 @@ from web_content_extraction_benchmark_spark.operators.lm import (
 )
 
 
+def _lm_score_duckdb(rows) -> set[tuple]:
+    """lm_score_sql's (id, lm_score_micro, lm_bigrams) rows over
+    (doc_id, text) tuples."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?,?)", rows)
+    return set(con.execute(
+        lm_score_sql("SELECT doc_id, text FROM d")).fetchall())
+
+
 def test_frozen_table_reproducible():
     """Re-derive from the fixture corpus and assert exact equality —
     the frozen-model rule's drift guard (like the E15 weights test)."""
@@ -39,13 +49,7 @@ def test_lookup_precedence_hand_computed(spark):
     got = {r.id: (r.lm_score_micro, r.lm_bigrams)
            for r in lm_score(df).collect()}
     assert got == {1: (bs, 1), 2: (us, 1), 3: (DEFAULT_SCORE, 1)}
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE d(doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO d VALUES (?,?)", rows)
-    want = {i: (s, n) for i, s, n in con.execute(
-        lm_score_sql("SELECT doc_id, text FROM d")).fetchall()}
-    assert got == want
+    assert got == {i: (s, n) for i, s, n in _lm_score_duckdb(rows)}
 
 
 def test_in_distribution_scores_higher(spark, sf_dir):
@@ -82,15 +86,10 @@ def test_in_distribution_scores_higher(spark, sf_dir):
 
 
 def test_lm_kernel_equals_join_plan(spark, sf_dir):
-    """r9: the Arrow-kernel lm_score and the pure-JVM broadcast-join
-    twin must return bit-identical rows (incl. the no-bigram and NULL
-    exclusions and the empty-token bigrams of multi-space text)."""
-    from pyspark.sql import functions as F
-
-    from web_content_extraction_benchmark_spark.operators.lm import (
-        lm_score,
-        lm_score_join,
-    )
+    """The Arrow-kernel lm_score and the DuckDB join-plan mirror
+    lm_score_sql must return identical rows (incl. the no-bigram and
+    NULL exclusions and the empty-token bigrams of multi-space text)."""
+    from pyspark.sql import types as T
 
     hand = spark.createDataFrame(
         [(1, "the cat sat"), (2, "x"), (3, None), (4, ""), (5, "a  b")],
@@ -98,10 +97,14 @@ def test_lm_kernel_equals_join_plan(spark, sf_dir):
     )
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
-    ).limit(300)
+    ).orderBy("doc_id").limit(300)
     for df in (hand, docs):
-        a = {tuple(r) for r in lm_score(df).collect()}
-        b = {tuple(r) for r in lm_score_join(df).collect()}
-        assert a == b and a
-    # schema parity (nullability included — the oracle row hashes it)
-    assert lm_score(hand).schema == lm_score_join(hand).schema
+        got = {tuple(r) for r in lm_score(df).collect()}
+        assert got == _lm_score_duckdb([tuple(r) for r in df.collect()])
+        assert got
+    # schema (nullability included — the oracle row hashes it)
+    assert lm_score(hand).schema == T.StructType([
+        T.StructField("id", T.LongType(), True),
+        T.StructField("lm_score_micro", T.LongType(), True),
+        T.StructField("lm_bigrams", T.IntegerType(), False),
+    ])

@@ -475,6 +475,29 @@ def test_oph_short_docs_densify(spark):
     assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
 
 
+@pytest.mark.parametrize("hash_fn", ["xxhash", "MD5", "sha1"])
+def test_lsh_rejects_unknown_hash_fn(spark, tmp_path, hash_fn):
+    """An unrecognised hash_fn must raise, not silently run the md5
+    path — in the band-key builder and in both entry points over it."""
+    from web_content_extraction_benchmark_spark.operators.dedup import (
+        lsh_band_keys,
+    )
+    from web_content_extraction_benchmark_spark.operators.incremental_dedup import (
+        NearDupIndex,
+    )
+
+    df = spark.createDataFrame([(1, "a b c d e f")],
+                               "doc_id long, text string")
+    expected = "'md5', 'xxhash64', 'oph'"
+    with pytest.raises(ValueError, match=expected):
+        lsh_band_keys(df, hash_fn=hash_fn)
+    with pytest.raises(ValueError, match=expected):
+        minhash_lsh_pairs(df, hash_fn=hash_fn)
+    idx = NearDupIndex(str(tmp_path / "idx"), hash_fn=hash_fn)
+    with pytest.raises(ValueError, match=expected):
+        idx.add_batch(df)
+
+
 def test_ivf_prebuilt_inverted_lists_identical(spark, sf_dir):
     """The production probe path (codebook + materialized inverted
     lists via ivf_index) returns EXACTLY what the per-call assignment

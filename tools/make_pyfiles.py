@@ -14,10 +14,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "web_content_extraction_benchmark_spark"
 
 
-def main() -> None:
-    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        REPO, "wceb_spark.zip"
-    )
+def main(out: str = os.path.join(REPO, "wceb_spark.zip")) -> None:
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(os.path.join(REPO, PKG)):
             for name in sorted(files):
@@ -28,4 +25,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(*sys.argv[1:2])

@@ -361,18 +361,6 @@ def main() -> None:
             ),
         ),
         (
-            "OPH signatures, pure-Catalyst twin (oph_sql, r6)",
-            "NO Python eval node anywhere — the whole 128-wide "
-            "signature (bin-mask filter/min + circular ffill aggregate) "
-            "and banding stay JVM-side",
-            __import__(
-                "web_content_extraction_benchmark_spark.operators.dedup",
-                fromlist=["lsh_band_keys"],
-            ).lsh_band_keys(
-                docs, num_hashes=128, bands=16, hash_fn="oph_sql"
-            ),
-        ),
-        (
             "incremental near-dup candidates vs a committed store (r6)",
             "the STORED band scan feeds BroadcastHashJoins built from "
             "the NEW batch (its distinct-keys shuffle is the only band "

@@ -480,7 +480,7 @@ def build_parser() -> argparse.ArgumentParser:
     # existing index loads its persisted config
     p.add_argument("--threshold", type=float, default=None)
     p.add_argument("--hash-fn", default=None,
-                   choices=["md5", "xxhash64", "oph", "oph_sql"])
+                   choices=["md5", "xxhash64", "oph"])
     p.add_argument("--num-hashes", type=int, default=None)
     p.add_argument("--bands", type=int, default=None)
     p.add_argument("--signature", default=None,

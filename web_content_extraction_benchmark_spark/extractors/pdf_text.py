@@ -93,6 +93,9 @@ _DELIM = frozenset(b"()<>[]{}/%")
 # same byte runs; token branches that re-lex from the token start
 # (literal/hex strings, #-escaped names) use m.start(m.lastindex) — the
 # GROUP start — because m.start() now points at the skipped ws.
+# The final ``eof`` alternative lets trailing ws/comments match as a
+# prefix of end-of-buffer; without it the regex backtracks into the
+# prefix and returns a ws byte (or a comment's '(') as a token.
 _MASTER_RE = re.compile(
     rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
     rb"(?:(?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))"
@@ -101,7 +104,8 @@ _MASTER_RE = re.compile(
     rb"|(?P<kw>[^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"
     rb"|(?P<lit>\()"
     rb"|(?P<hex><)"
-    rb"|(?P<other>.))",
+    rb"|(?P<other>.)"
+    rb"|(?P<eof>\Z))",
     re.DOTALL,
 )
 
@@ -225,11 +229,11 @@ class _Lexer:
 
     def next_token(self):
         m = _MASTER_RE.match(self.buf, self.pos)
-        if m is None:
-            return None
         kind = m.lastgroup
         idx = m.lastindex
         self.pos = m.end()
+        if kind == "eof":
+            return None
         if kind == "num":
             tok = m.group(idx)
             return float(tok) if b"." in tok else int(tok)

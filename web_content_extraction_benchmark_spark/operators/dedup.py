@@ -179,135 +179,69 @@ def minhash_signature_fast(base_hashes: Column,
     ]
 
 
+_OPH_EMPTY = np.iinfo(np.int64).max
+
+
+def oph_signatures(rows, k: int) -> np.ndarray:
+    """One-permutation-hashing signatures (Li/Owen/Zhang-style OPH with
+    rotation densification) of a batch of base-hash arrays, as an
+    ``(len(rows), k)`` int64 matrix: each 64-bit hash is routed to bin
+    ``hash mod k`` and each bin keeps its minimum, so a signature costs
+    O(shingles) per doc instead of the remix path's O(shingles x k).
+    Empty bins (docs with fewer distinct shingles than bins, or unlucky
+    routing) borrow the nearest filled bin to their left, circularly —
+    a deterministic densification, so equal shingle sets always produce
+    equal signatures and LSH banding stays sound.  Rows with no hashes
+    keep int64-max in every bin (callers filter them).
+
+    Vectorized across the batch: one np.minimum.at over a flattened
+    (rows x bins) lattice + one maximum.accumulate circular
+    forward-fill."""
+    n = len(rows)
+    lengths = np.fromiter((len(a) for a in rows), dtype=np.int64, count=n)
+    flat = np.concatenate(
+        [np.asarray(a, dtype=np.int64) for a in rows]
+    ) if lengths.sum() else np.empty(0, dtype=np.int64)
+    row_ids = np.repeat(np.arange(n, dtype=np.int64), lengths)
+    sig = np.full(n * k, _OPH_EMPTY, dtype=np.int64)
+    # bin routing on the UNSIGNED view (pmod of a negative int64
+    # hash differs between engines; unsigned is unambiguous)
+    bins = (flat.astype(np.uint64) % np.uint64(k)).astype(np.int64)
+    np.minimum.at(sig, row_ids * k + bins, flat)
+    sig = sig.reshape(n, k)
+    if (sig == _OPH_EMPTY).any():
+        # circular forward-fill from the left: tile to (n, 2k), carry
+        # the last filled index forward, then read back the second half
+        tiled = np.tile(sig, (1, 2))
+        idx = np.where(tiled != _OPH_EMPTY, np.arange(2 * k), -1)
+        np.maximum.accumulate(idx, axis=1, out=idx)
+        take = idx[:, k:]
+        sig = np.where(
+            take >= 0,
+            np.take_along_axis(tiled, np.maximum(take, 0), axis=1),
+            _OPH_EMPTY,
+        )
+    return sig
+
+
 def make_oph_signature_udf(num_hashes: int):
-    """One-permutation-hashing signature (Li/Owen/Zhang-style OPH with
-    rotation densification): each shingle's single 64-bit hash is routed
-    to bin ``hash mod k`` and each bin keeps its minimum — the whole
-    k-wide signature costs O(shingles) per doc instead of the remix
-    path's O(shingles x k).  Empty bins (docs with fewer distinct
-    shingles than bins, or unlucky routing) borrow the nearest filled
-    bin to their left, circularly — a deterministic densification, so
-    equal shingle sets always produce equal signatures and LSH banding
-    stays sound.  Like the xxhash64 remix path, this estimator is
-    engine-specific but semantics-neutral: candidates are verified by
-    EXACT Jaccard, so the estimator only moves recall, never
-    correctness of emitted pairs.
-
-    Returns an Arrow-batched pandas UDF: array<long> base hashes ->
-    array<long> signature of length ``num_hashes``.  Fully vectorized
-    across the batch (one np.minimum.at over a flattened (rows x bins)
-    lattice + one maximum.accumulate circular forward-fill)."""
+    """Arrow-batched pandas UDF: array<long> base hashes -> array<long>
+    OPH signature of length ``num_hashes`` (see ``oph_signatures``).
+    Like the xxhash64 remix path, this estimator is engine-specific but
+    semantics-neutral: candidates are verified by EXACT Jaccard, so the
+    estimator only moves recall, never correctness of emitted pairs."""
     from pyspark.sql.functions import pandas_udf
-
-    k = num_hashes
-    EMPTY = np.iinfo(np.int64).max
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def oph(base: pd.Series) -> pd.Series:
-        n = len(base)
-        if n == 0:
+        if len(base) == 0:
             return pd.Series([], dtype=object)
-        lengths = np.fromiter((len(a) for a in base), dtype=np.int64,
-                              count=n)
-        flat = np.concatenate(
-            [np.asarray(a, dtype=np.int64) for a in base]
-        ) if lengths.sum() else np.empty(0, dtype=np.int64)
-        rows = np.repeat(np.arange(n, dtype=np.int64), lengths)
-        sig = np.full(n * k, EMPTY, dtype=np.int64)
-        # bin routing on the UNSIGNED view (pmod of a negative int64
-        # hash differs between engines; unsigned is unambiguous)
-        bins = (flat.astype(np.uint64) % np.uint64(k)).astype(np.int64)
-        np.minimum.at(sig, rows * k + bins, flat)
-        sig = sig.reshape(n, k)
-        if (sig == EMPTY).any():
-            # circular forward-fill from the left: tile to (n, 2k),
-            # carry the last filled index forward, then read back the
-            # second half
-            tiled = np.tile(sig, (1, 2))
-            filled = tiled != EMPTY
-            idx = np.where(filled, np.arange(2 * k), -1)
-            np.maximum.accumulate(idx, axis=1, out=idx)
-            take = idx[:, k:]
-            # rows with NO shingles keep EMPTY (callers filter them)
-            ok = take >= 0
-            out = np.where(
-                ok,
-                np.take_along_axis(tiled, np.maximum(take, 0), axis=1),
-                EMPTY,
-            )
-            sig = out
-        return pd.Series(list(sig))
+        return pd.Series(list(oph_signatures(base, num_hashes)))
 
     return oph
 
 
-def oph_signature_catalyst(hashes: Column, num_hashes: int) -> Column:
-    """Pure-Catalyst one-permutation signature — the JVM-side twin of
-    ``make_oph_signature_udf`` (bit-identical output for power-of-two
-    ``num_hashes``, modulo the astronomically unlikely hash ==
-    Long.MAX_VALUE): bin routing is ``hash & (k-1)`` (== unsigned
-    ``mod k`` for power-of-two k, sidestepping the signed-pmod
-    ambiguity), per-bin minimum via one filter+array_min pass per bin,
-    then the same circular-left forward-fill densification (tile to 2k,
-    carry last filled value, read back the second half).
-
-    Cost shape: O(shingles x k) comparisons per doc — MORE ops than the
-    Arrow kernel's O(shingles) lattice, but each op is a codegen'd
-    bitmask/compare instead of a Python-side Arrow batch round-trip.
-    MEASURED (tools/oph_ab.py, 218,750 chain docs, 128/16, local[32],
-    BENCH/oph_ab_r06.jsonl): Arrow "oph" 28.4k docs/s, this path 10.3k,
-    xxhash64 remix 25.3k — the lattice kernel's O(shingles) beats the
-    JVM's O(shingles x k), so "oph" STAYS the corpus-scale default and
-    this path is the no-Python-stage alternative (e.g. clusters where
-    Python workers are unavailable).  Band keys verified bit-identical
-    across both (A/B check row + pytest at 8/4 and 128/16).
-    ``hash_fn="oph_sql"`` in the LSH entry points selects this path."""
-    k = num_hashes
-    if k & (k - 1):
-        raise ValueError(
-            f"oph_sql needs power-of-two num_hashes (got {k}): bin "
-            "routing uses hash & (k-1) to match the kernel's unsigned mod"
-        )
-    bins = F.sequence(F.lit(0), F.lit(k - 1))
-    sig0 = F.transform(
-        bins,
-        lambda i: F.array_min(
-            F.filter(
-                hashes,
-                lambda h: h.bitwiseAND(F.lit(k - 1)) == i.cast("long"),
-            )
-        ),
-    )
-    tiled = F.concat(sig0, sig0)
-    # NB: the aggregate's zero value must NOT reference tiled (e.g. a
-    # slice(tiled, 1, 0)): lambda-bearing subtrees are exempt from
-    # subexpression elimination, so that would re-evaluate the whole
-    # O(shingles x k) lattice per row just to make an empty array
-    # (review finding r6)
-    # an EMPTY hashes array fills no bin, so densification carries only
-    # nulls — coalesce those to the kernel's int64-max EMPTY sentinel so
-    # the bit-identity contract holds even for shingle-less docs (the
-    # LSH callers filter size(sh) > 0 anyway, but the public function
-    # must not turn "no shingles" into all-null band keys that
-    # concat_ws would collapse onto one colliding bucket; ADVICE r6)
-    empty = F.lit(np.iinfo(np.int64).max)
-    ff = F.aggregate(
-        tiled,
-        F.struct(
-            F.array().cast("array<long>").alias("out"),
-            F.lit(None).cast("long").alias("last"),
-        ),
-        lambda acc, x: F.struct(
-            F.concat(
-                acc["out"], F.array(F.coalesce(x, acc["last"]))
-            ).alias("out"),
-            F.coalesce(x, acc["last"]).alias("last"),
-        ),
-        lambda acc: F.transform(
-            F.slice(acc["out"], k + 1, k), lambda v: F.coalesce(v, empty)
-        ),
-    )
-    return ff
+HASH_FNS = ("md5", "xxhash64", "oph")
 
 
 def lsh_band_keys(
@@ -329,7 +263,15 @@ def lsh_band_keys(
     projection, or CollapseProject inlines num_hashes copies of it.
     Shingle-less docs (shorter than the shingle size) are excluded:
     their signatures would be all-null and collide with each other on
-    every band key (and Jaccard is undefined for empty sets)."""
+    every band key (and Jaccard is undefined for empty sets).
+
+    ``hash_fn`` must be one of ``HASH_FNS``; anything else raises
+    ValueError (see ``minhash_lsh_pairs`` for what each one does)."""
+    if hash_fn not in HASH_FNS:
+        raise ValueError(
+            f"unknown hash_fn {hash_fn!r}: expected one of "
+            + ", ".join(map(repr, HASH_FNS))
+        )
     rows_per_band = num_hashes // bands
     shingled = df.select(
         F.col(id_col).alias("id"),
@@ -342,26 +284,15 @@ def lsh_band_keys(
     # driver-side plan BUILDING at 128 hashes (the SQL parser does the
     # same work JVM-side in ~0.1 s).  Expressions are identical
     # (pytest-pinned old==new band keys; the md5 path stays oracled).
-    if hash_fn in ("oph", "oph_sql"):
+    if hash_fn == "oph":
         # one-permutation hashing: the whole signature in O(shingles)
         # per doc (vs O(shingles x num_hashes) for the remix paths) —
-        # the production width at corpus scale.  "oph" = Arrow kernel;
-        # "oph_sql" = the bit-identical pure-Catalyst twin (A/B'd by
-        # tools/oph_ab.py)
-        hashed = shingled.select(
+        # the production width at corpus scale
+        oph = make_oph_signature_udf(num_hashes)
+        sig_arr = shingled.select(
             "id",
             F.transform("_sh", lambda s: F.xxhash64(s)).alias("_hs"),
-        )
-        if hash_fn == "oph":
-            oph = make_oph_signature_udf(num_hashes)
-            sig_arr = hashed.select("id", oph("_hs").alias("_sig"))
-        else:
-            sig_arr = hashed.select(
-                "id",
-                oph_signature_catalyst(
-                    F.col("_hs"), num_hashes
-                ).alias("_sig"),
-            )
+        ).select("id", oph("_hs").alias("_sig"))
         oph_bands = ", ".join(
             "concat_ws('|', transform("
             f"slice(_sig, {b * rows_per_band + 1}, {rows_per_band}), "
@@ -467,11 +398,10 @@ def minhash_lsh_pairs(
     ``hash_fn``: "md5" (engine-independent, the oracle fixture),
     "xxhash64" (1 string hash + num_hashes remixes per shingle),
     "oph" (one-permutation hashing: the whole signature in O(shingles)
-    per doc — the corpus-scale default; see make_oph_signature_udf), or
-    "oph_sql" (the bit-identical pure-Catalyst OPH twin — no Python
-    stage at all; A/B'd in tools/oph_ab.py).  All variants verify
-    candidates by exact Jaccard, so the choice moves candidate recall
-    only, never the correctness of emitted pairs."""
+    per doc — the corpus-scale default; see oph_signatures).  Any
+    other value raises ValueError.  All variants verify candidates by
+    exact Jaccard, so the choice moves candidate recall only, never the
+    correctness of emitted pairs."""
     candidates = _lsh_candidate_pairs(
         df, text_col, id_col, num_hashes, bands, hash_fn
     )
