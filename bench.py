@@ -278,9 +278,8 @@ def main() -> None:
         truth = pages.select(
             "url", "dataset", F.col("gold").alias("plaintext")
         )
-        # persist scores: the micro rollup would otherwise recompute the
-        # whole extract+score pipeline (aggregate_scores caches only the
-        # tiny per-dataset aggregate)
+        # persist scores: the per-dataset and micro rollups would otherwise
+        # each recompute the whole extract+score pipeline
         scores = score_answers(answers, truth).persist()
         agg = aggregate_scores(scores, score_cols=("dist", "f1"))
         agg.collect()

@@ -2,9 +2,11 @@
 must stay visible in .explain() — pushed filters, pruned columns,
 broadcast joins, no accidental cartesian products."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from web_content_extraction_benchmark_spark.plans.pipeline import (
+    aggregate_scores,
     extract_answers,
     score_answers,
 )
@@ -50,6 +52,28 @@ def test_truth_join_broadcasts(spark, sf_dir):
     plan = _plan(scores)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize("cached_pages", [False, True])
+def test_aggregate_scores_runs_python_stages_once_per_rollup(
+        spark, sf_dir, cached_pages):
+    """On unpersisted scores the extract (MapInArrow) and score
+    (ArrowEvalPython) kernels run once for the per-dataset rollup and once
+    for the micro rollup; the macro rollup adds no third pass, also when
+    the input pages are cached (AQE then reuses no exchange)."""
+    pages = synthesize_pages(spark, sf_dir)
+    if cached_pages:
+        pages = pages.cache()
+    try:
+        answers = extract_answers(pages, ["plain"])
+        agg = aggregate_scores(score_answers(answers, truth_table(pages)),
+                               score_cols=("dist",))
+        agg.collect()
+        final = _plan(agg).split("== Initial Plan ==")[0]
+    finally:
+        pages.unpersist()
+    assert final.count("MapInArrow") == 2
+    assert final.count("ArrowEvalPython") == 2
 
 
 def test_ngram_jaccard_is_equi_join(spark, sf_dir):

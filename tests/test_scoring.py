@@ -1,13 +1,18 @@
 import random
+from collections import Counter
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from web_content_extraction_benchmark_spark.functions.scoring import (
+    _lcs_match_indices,
     lcs_length,
     rouge_lsum,
     split_sentences,
     token_levenshtein_ratio,
 )
+from web_content_extraction_benchmark_spark.textutils import ws_tokens
 
 
 def _lcs_dp(a, b):
@@ -79,3 +84,78 @@ def test_split_sentences():
     assert split_sentences("line one\nline two") == ["line one", "line two"]
     assert split_sentences("") == []
     assert split_sentences(" \n ") == []
+
+
+def _rouge_lsum_all_pairs(target, pred):
+    """rouge_lsum with the union built from every (ref, candidate) LCS,
+    never short-circuited: the reference the covered-sentence skip must
+    reproduce exactly."""
+    target_sents = [ws_tokens(s) for s in split_sentences(target)]
+    pred_sents = [ws_tokens(s) for s in split_sentences(pred)]
+    m = sum(len(s) for s in target_sents)
+    n = sum(len(s) for s in pred_sents)
+    prec = rec = f1 = 0.0
+    if m > 0 and n > 0:
+        cnt_target = Counter(t for s in target_sents for t in s)
+        cnt_pred = Counter(t for s in pred_sents for t in s)
+        hits = 0
+        for ref_sent in target_sents:
+            union = set()
+            for can_sent in pred_sents:
+                union.update(_lcs_match_indices(ref_sent, can_sent))
+            for idx in sorted(union):
+                token = ref_sent[idx]
+                if cnt_target[token] > 0 and cnt_pred[token] > 0:
+                    hits += 1
+                    cnt_target[token] -= 1
+                    cnt_pred[token] -= 1
+        prec = hits / n
+        rec = hits / m
+        if prec + rec > 0:
+            f1 = 2.0 * prec * rec / (prec + rec)
+    if not target.strip():
+        rec = 1.0
+        if not pred.strip():
+            prec = 1.0
+            f1 = 1.0
+    return prec, rec, f1
+
+
+_words = st.lists(st.sampled_from("abcdef"), max_size=9)
+_seps = st.sampled_from(["\n", ". ", "! ", "? ", "\n \n", "\n\t\n", " "])
+
+
+@st.composite
+def _texts(draw):
+    """(target, pred) pairs whose candidate sentences copy, embed, cut,
+    repeat or ignore the target's sentences."""
+    target = draw(st.lists(_words, max_size=6))
+    pred = []
+    for _ in range(draw(st.integers(0, 7))):
+        kind = draw(st.sampled_from(
+            ["copy", "embed", "slice", "repeat", "fresh"]))
+        src = draw(st.sampled_from(target)) if target else []
+        if kind == "copy":
+            pred.append(list(src))
+        elif kind == "embed":
+            pred.append(draw(_words) + src + draw(_words))
+        elif kind == "slice":
+            i = draw(st.integers(0, len(src)))
+            j = draw(st.integers(i, len(src)))
+            pred.append(src[i:j] + draw(_words))
+        elif kind == "repeat" and pred:
+            pred.append(list(draw(st.sampled_from(pred))))
+        else:
+            pred.append(draw(_words))
+
+    def join(sents):
+        return "".join(" ".join(s) + draw(_seps) for s in sents)
+
+    return join(target), join(pred)
+
+
+@given(_texts())
+@settings(max_examples=500, deadline=None)
+def test_rouge_covered_sentence_skip_matches_all_pairs(texts):
+    target, pred = texts
+    assert rouge_lsum(target, pred) == _rouge_lsum_all_pairs(target, pred)

@@ -123,6 +123,25 @@ def test_aggregate_micro_macro_vs_pandas(spark, pages):
     assert macro[1] == pytest.approx(per_ds.median().median())
 
 
+def _rdd_blocks(spark) -> int:
+    return sum(info.numCachedPartitions()
+               for info in spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+def test_aggregate_scores_leaves_no_cached_blocks(spark):
+    """Repeated aggregation in one long-lived session must not accumulate
+    cached blocks: the block count returns to its baseline."""
+    scores = spark.createDataFrame(
+        [(f"u{i}", f"m{i % 3}", f"d{i % 4}", i / 40.0) for i in range(40)],
+        "url string, model string, dataset string, dist double",
+    )
+    baseline = _rdd_blocks(spark)
+    for _ in range(3):
+        assert len(aggregate_scores(scores, score_cols=("dist",)).collect()) \
+            == 3 * 4 + 3 + 3
+    assert _rdd_blocks(spark) == baseline
+
+
 def test_ensemble_majority_spark(spark, pages):
     models = ["main_content", "plain", "readability"]
     answers = extract_answers(pages, models)

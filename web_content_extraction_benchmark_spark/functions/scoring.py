@@ -152,9 +152,18 @@ def rouge_lsum(target: str, pred: str) -> tuple[float, float, float]:
         cnt_pred = Counter(t for s in pred_sents for t in s)
         hits = 0
         for ref_sent in target_sents:
-            union: set[int] = set()
-            for can_sent in pred_sents:
-                union.update(_lcs_match_indices(ref_sent, can_sent))
+            if not ref_sent:
+                continue
+            # A candidate sentence containing ref_sent verbatim already
+            # puts every ref index in the union, and a full union cannot
+            # grow: skip every per-pair LCS DP for this sentence.
+            if any(_is_contiguous_sublist(ref_sent, can_sent)
+                   for can_sent in pred_sents):
+                union = range(len(ref_sent))
+            else:
+                union = set()
+                for can_sent in pred_sents:
+                    union.update(_lcs_match_indices(ref_sent, can_sent))
             for idx in sorted(union):
                 token = ref_sent[idx]
                 if cnt_target[token] > 0 and cnt_pred[token] > 0:

@@ -499,7 +499,12 @@ def aggregate_scores(scores: DataFrame,
     boundary can flip its last decimal between runs and engines — the
     CLAUDE.md oracle-float rule.  Medians are exact selections either
     way.  Macro rollups then average the 6-rounded per-dataset means
-    (tiny, fixed cardinality)."""
+    (tiny, fixed cardinality).
+
+    Nothing is cached, so repeated calls in one session leave no blocks
+    behind.  The plan reads ``scores`` twice (per-dataset and micro);
+    callers that do not want the extract+score lineage run twice should
+    persist ``scores`` (and unpersist it) themselves."""
     if unit_scale:
         # denominator counts non-NULL scores (like F.mean) so a NULL
         # row cannot silently deflate the mean; mirrored in the oracle
@@ -515,39 +520,31 @@ def aggregate_scores(scores: DataFrame,
         mean_aggs = [F.mean(c).alias(f"mean_{c}") for c in score_cols]
     median_aggs = [F.median(c).alias(f"median_{c}") for c in score_cols]
 
-    # per_ds is tiny (models x datasets) but its lineage is the whole
-    # extract+score pipeline — cache it so the macro rollup (and the final
-    # union) does not recompute upstream.  Callers aggregating more than
-    # once should persist `scores` themselves.
-    per_ds = scores.groupBy("model", "dataset").agg(
-        *mean_aggs, *median_aggs
-    ).cache()
+    values = [f"mean_{c}" for c in score_cols] + [
+        f"median_{c}" for c in score_cols
+    ]
+    per_ds = scores.groupBy("model", "dataset").agg(*mean_aggs, *median_aggs)
     micro = scores.groupBy("model").agg(*mean_aggs, *median_aggs).select(
-        "model", F.lit("_micro").alias("dataset"),
-        *[f"mean_{c}" for c in score_cols],
-        *[f"median_{c}" for c in score_cols],
+        "model", F.lit("_micro").alias("dataset"), *values
     )
     macro_mean = (
         (lambda c: F.mean(F.round(F.col(f"mean_{c}"), 6)))
         if unit_scale
         else (lambda c: F.mean(F.col(f"mean_{c}")))
     )
-    macro = per_ds.groupBy("model").agg(
+    # One pass over per_ds yields its own rows AND the macro rollup: a
+    # second read would re-run per_ds's lineage (the whole extract+score
+    # pipeline) whenever AQE does not reuse its exchange, which it skips
+    # when the inputs are themselves cached.
+    by_model = per_ds.groupBy("model").agg(
+        F.collect_list(F.struct("dataset", *values)).alias("rows"),
         *[macro_mean(c).alias(f"mean_{c}") for c in score_cols],
         *[F.median(f"median_{c}").alias(f"median_{c}") for c in score_cols],
-    ).select(
-        "model", F.lit("_macro").alias("dataset"),
-        *[f"mean_{c}" for c in score_cols],
-        *[f"median_{c}" for c in score_cols],
     )
-    ordered = ["model", "dataset"] + [f"mean_{c}" for c in score_cols] + [
-        f"median_{c}" for c in score_cols
-    ]
-    return (
-        per_ds.select(*ordered)
-        .unionByName(micro.select(*ordered))
-        .unionByName(macro.select(*ordered))
-    )
+    macro_row = F.struct(F.lit("_macro").alias("dataset"), *values)
+    return by_model.select(
+        "model", F.explode(F.concat("rows", F.array(macro_row))).alias("r")
+    ).select("model", "r.*").unionByName(micro)
 
 
 MIXED_SCHEMA = T.StructType(
